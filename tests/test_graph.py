@@ -276,6 +276,27 @@ def test_transitive_closure_empty_and_fixpoint_gate(spark):
         transitive_closure_from(chain, ["Q0"], max_iters=3)
 
 
+@pytest.mark.parametrize("checkpoint", [True, False])
+def test_transitive_closure_from_cycle_back_to_seed(spark, checkpoint):
+    """A 3-hop chain Q1 -> Q2 -> Q3 -> Q4 closing back on the seed: the
+    seed itself is reached (>= 1 edge), Q9 (an in-edge only) is not, and
+    the walk stops once the revisited seed's hop adds nothing new."""
+    from wikidata_dump_processor_spark.operators.graph import (
+        transitive_closure_from,
+    )
+
+    e = spark.createDataFrame(
+        [("Q1", "Q2"), ("Q2", "Q3"), ("Q3", "Q4"), ("Q4", "Q1"), ("Q9", "Q1")],
+        "src string, dst string",
+    )
+    # hops: Q2, Q3, Q4, Q1 (the seed, new to `reached`), then an empty
+    # frontier and the fixpoint check: six iterations
+    got = transitive_closure_from(e, ["Q1"], max_iters=6, checkpoint=checkpoint)
+    assert sorted(r.id for r in got.collect()) == ["Q1", "Q2", "Q3", "Q4"]
+    with pytest.raises(ValueError, match="fixpoint"):
+        transitive_closure_from(e, ["Q1"], max_iters=5, checkpoint=checkpoint)
+
+
 def _py_triangles(edges):
     """Independent oracle: brute-force over the undirected simple graph."""
     und = set()

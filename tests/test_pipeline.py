@@ -3,6 +3,8 @@
 import json
 import os
 import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -395,17 +397,103 @@ def test_nodes_table_reregistered_on_resume(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") == 1, plan[:3000]
 
 
-def test_pipeline_triples_by_subj_colocated(spark, tmp_path):
-    """VERDICT r4 #3: subject-bucketed triples layout — the reference's
-    per-entity point query (wdq2.pl:347-406) is one pruned bucket, and a
-    nodes join on id plans with NO Exchange on EITHER side (co-located:
-    same bucket count, same long key domain)."""
-    out = str(tmp_path / "kg")
+@pytest.fixture(scope="module")
+def tbs_kg(spark, tmp_path_factory):
+    """One pipeline run with the subject-bucketed triples layout."""
+    out = str(tmp_path_factory.mktemp("tbs") / "kg")
     pages = datagen.gen_pages(spark, 120).localCheckpoint(eager=True)
     al, cat = datagen.gen_aliases(spark), datagen.gen_entity_catalog(spark)
     res = run_pipeline(
         spark, pages, al, out, cat, fingerprint="f", triples_by_subj=True
     )
+    return res, (pages, al, out, cat)
+
+
+def _rows(df, cols):
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def _scan_files_per_partition(df):
+    """Files per partition of the executed plan's FileSourceScanExec
+    input RDD (after bucket pruning, unlike the ``numFiles`` metric)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    scans = [
+        leaves.apply(i) for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert len(scans) == 1, plan.toString()
+    return [len(p.files()) for p in scans[0].inputRDD().partitions()]
+
+
+def _jobs_and_tasks(spark, group, action):
+    """(jobs, tasks) Spark ran for ``action()`` under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    # the status store is fed by the async listener bus: wait for it
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert time.monotonic() < deadline, jobs
+        time.sleep(0.05)
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks for j in jobs for s in j.stageIds
+    )
+    return len(jobs), tasks
+
+
+def test_point_triples_session_conf_and_threads(spark, tbs_kg):
+    """The probe sets no session conf: it leaves autoBucketedScan as it
+    found it, and concurrent probes in one session each get their own
+    entity's rows."""
+    from wikidata_dump_processor_spark.plans.pipeline import point_triples
+
+    res, _ = tbs_kg
+    tbs_tbl = res["manifest"].stages["triples_by_subj"]["metrics"]["table"]
+    tbs = spark.table(tbs_tbl)
+    cols = [c for c in tbs.columns if c not in ("subj_num", "_part_id")]
+    ids = [
+        r.subj for r in tbs.filter(F.col("subj_num").isNotNull())
+        .select("subj").distinct().orderBy("subj").limit(2).collect()
+    ]
+    assert len(ids) == 2
+    want = {i: _rows(tbs.filter(F.col("subj") == i), cols) for i in ids}
+    assert all(want.values())
+
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    found = spark.conf.get(key)
+    try:
+        for setting in ("false", "true"):
+            spark.conf.set(key, setting)
+            assert _rows(point_triples(spark, tbs_tbl, ids[0]), cols) == want[ids[0]]
+            assert spark.conf.get(key) == setting
+    finally:
+        spark.conf.set(key, found)
+
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(
+            lambda i: (i, _rows(point_triples(spark, tbs_tbl, i), cols)),
+            ids * 4, timeout=300,
+        ))
+    assert all(rows == want[i] for i, rows in got)
+    assert spark.conf.get(key) == found
+
+
+def test_pipeline_triples_by_subj_colocated(spark, tbs_kg):
+    """VERDICT r4 #3: subject-bucketed triples layout — the reference's
+    per-entity point query (wdq2.pl:347-406) is one pruned bucket, and a
+    nodes join on id plans with NO Exchange on EITHER side (co-located:
+    same bucket count, same long key domain)."""
+    res, (pages, al, out, cat) = tbs_kg
     man = res["manifest"]
     tbs_tbl = man.stages["triples_by_subj"]["metrics"]["table"]
     nodes_tbl = man.stages["nodes"]["metrics"]["table"]
@@ -425,8 +513,25 @@ def test_pipeline_triples_by_subj_colocated(spark, tmp_path):
     finally:
         spark.conf.set(key, "true")
     assert "SelectedBucketsCount: 1 out of 64" in plan, plan[:2000]
+
+    # the probe under session defaults: one job, one task, one file, and
+    # exactly the rows of the canonical `subj ==` filter
+    cols = [c for c in tbs.columns if c not in ("subj_num", "_part_id")]
     pq = point_triples(spark, tbs_tbl, row.subj)
-    assert pq.count() == cano.filter(F.col("subj") == row.subj).count() > 0
+    assert _jobs_and_tasks(spark, "point-probe", pq.collect) == (1, 1)
+    assert _scan_files_per_partition(pq) == [1]
+    want = _rows(cano.filter(F.col("subj") == row.subj), cols)
+    assert want and _rows(pq, cols) == want
+    # Q and L ids sharing a numeric part land in one bucket: the exact
+    # `subj` match keeps them apart (the Q twin of a lexeme subject gets
+    # only its own rows, none of the lexeme's)
+    lex = tbs.filter(F.col("subj").startswith("L")).select("subj").first()
+    assert lex is not None
+    for ent in (lex.subj, "Q" + lex.subj[1:]):
+        want = _rows(cano.filter(F.col("subj") == ent), cols)
+        assert _rows(point_triples(spark, tbs_tbl, ent), cols) == want
+    with pytest.raises(ValueError, match="not an entity id"):
+        point_triples(spark, tbs_tbl, "P31")
 
     # co-located join: zero exchanges on BOTH sides
     nodes = spark.table(nodes_tbl)
@@ -435,6 +540,12 @@ def test_pipeline_triples_by_subj_colocated(spark, tmp_path):
     jplan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in jplan
     assert "Exchange" not in jplan, jplan[:3000]
+    # ... and the lazy probe keeps that co-located plan when joined
+    pj = nodes.hint("merge").join(pq, nodes.id_num == pq.subj_num)
+    assert pj.count() == len(_rows(pq, cols))
+    pjplan = pj._jdf.queryExecution().executedPlan().toString()
+    assert pjplan.count("SelectedBucketsCount: 1 out of 64") == 2, pjplan[:3000]
+    assert "Exchange" not in pjplan, pjplan[:3000]
 
     # resume: stage skipped, table re-registered from the manifest DDL
     before = man.stages["triples_by_subj"]["committed_at"]

@@ -378,15 +378,18 @@ def transitive_closure_from(
             .filter(F.col("id").isNotNull())
             .distinct()
         )
-        if reached is None:
-            frontier = nxt
-            reached = nxt
-        else:
-            frontier = nxt.join(reached, "id", "left_anti")
-            reached = reached.unionByName(frontier)
+        # checkpoint the hop's frontier FIRST and grow `reached` from it
+        # (the pairs walks' delta-then-union order): built from the
+        # un-checkpointed frontier, each hop's joins would run twice
+        frontier = nxt if reached is None else nxt.join(reached, "id", "left_anti")
         if checkpoint:
             frontier = frontier.localCheckpoint(eager=False)
-            reached = reached.localCheckpoint(eager=False)
+        if reached is None:
+            reached = frontier
+        else:
+            reached = reached.unionByName(frontier)
+            if checkpoint:
+                reached = reached.localCheckpoint(eager=False)
     raise ValueError(
         f"closure did not reach a fixpoint in max_iters={max_iters} "
         "iterations — raise the gate if the hierarchy is genuinely deeper"

@@ -469,9 +469,11 @@ def run_pipeline(
          triples re-materialized hash-BUCKETED + sorted on ``subj_num``
          with the SAME bucket count/key domain as the nodes table, so
          the reference's per-entity point query (wdq2.pl:347-406 —
-         "all triples of Q42") is one bucket probe (bucket pruning:
-         1 of ``node_buckets`` files opened) and a nodes⋈triples join
-         on id plans with NO Exchange on EITHER side (co-located).
+         "all triples of Q42", ``point_triples``) opens 1 of
+         ``node_buckets`` files: bucket pruning in the non-bucketed
+         scan's file selection (SPARK-32985), no forced bucketed scan,
+         one task.  A nodes⋈triples join on id plans with NO Exchange
+         on EITHER side (co-located).
       10. graph_degrees / graph_pagerank — (``graph_stats=True``)
          per-entity in/out degree and fixed-step PageRank
          (``pagerank_iters``) over the canonical entity graph
@@ -912,35 +914,24 @@ def write_bucketed(
 def point_triples(spark: SparkSession, table: str, entity_id: str) -> DataFrame:
     """All triples of ONE entity from the subject-bucketed layout — the
     reference's per-entity point query (``wdq2.pl Q42``, wdq2.pl:347-406)
-    as one pruned bucket probe (``SelectedBucketsCount: 1 out of N``).
+    as one lazy filter that reads one bucket file.
 
     The filter prunes on ``subj_num`` (the bucket column) and exact-matches
     ``subj`` (Q42 and L42 share a numeric id; the string match
-    disambiguates inside the one bucket).  Spark's
-    DisableUnnecessaryBucketedScan rule turns OFF the bucketed scan for a
-    bare filter (no join/agg needs the distribution), which would read
-    every bucket file — so the query executes eagerly inside a scoped
-    ``autoBucketedScan.enabled=false`` window (a point query's result is
-    bounded; eager execution is what pins the pruned plan)."""
+    disambiguates inside the one bucket).  A bare filter plans a
+    NON-bucketed scan (DisableUnnecessaryBucketedScan: nothing needs the
+    distribution), and since SPARK-32985 that scan's file selection still
+    applies bucket pruning: one task over one file.  The result stays
+    lazy, so a sort-merge join to a table bucketed the same way (nodes)
+    still plans bucketed scans of the one bucket with NO Exchange."""
     import re
 
     m = re.match(r"^([QL])(\d+)$", entity_id)
     if not m:
         raise ValueError(f"not an entity id: {entity_id!r}")
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        return (
-            spark.table(table)
-            .filter(
-                (F.col("subj_num") == int(m.group(2)))
-                & (F.col("subj") == entity_id)
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set(key, old)
+    return spark.table(table).filter(
+        (F.col("subj_num") == int(m.group(2))) & (F.col("subj") == entity_id)
+    )
 
 
 def register_kg_views(spark: SparkSession, tables: dict) -> list[str]:
