@@ -128,33 +128,52 @@ def test_partition_metrics_hadoop_fs_listing(spark, tmp_path):
         assert all(rel.endswith(".parquet") for rel in m["partitions"])
 
 
-def test_interrupted_stage_shows_in_progress_then_recommits(spark, tmp_path):
-    """St4 job-queue states (wdq_fetcher.pl:110-123): a stage that starts
-    but crashes leaves state=in_progress in the manifest (distinguishable
+@pytest.mark.parametrize("bucketed", [False, True], ids=["plain", "bucketed"])
+def test_interrupted_stage_shows_in_progress_then_recommits(spark, tmp_path, bucketed):
+    """St4 job-queue states (wdq_fetcher.pl:110-123): a stage whose write
+    job crashes leaves state=in_progress in the manifest (distinguishable
     from never-started); a re-run re-runs it and flips to committed with
-    the original started_at preserved."""
-    from wikidata_dump_processor_spark.plans.pipeline import _write_stage
+    the original started_at preserved — in the plain parquet layout and
+    in the bucketed one, whose re-run also registers its table."""
+    from wikidata_dump_processor_spark.plans.pipeline import (
+        PARQUET,
+        Bucketed,
+        _write_stage,
+    )
 
     out = str(tmp_path / "pipe")
+    layout = Bucketed("t_crash_bkt", 4, "id") if bucketed else PARQUET
     man = StageManifest(out)
 
     def boom():
-        raise RuntimeError("simulated executor loss")
+        return spark.range(10).withColumn(
+            "x", F.raise_error(F.lit("simulated executor loss"))
+        )
 
-    with pytest.raises(RuntimeError, match="simulated"):
-        _write_stage(spark, man, "s1", "fp", boom, os.path.join(out, "s1"))
+    with pytest.raises(Exception, match="simulated"):
+        _write_stage(spark, man, "s1", "fp", boom, os.path.join(out, "s1"), layout)
     m = json.load(open(os.path.join(out, MANIFEST)))
     assert m["s1"]["state"] == "in_progress" and "started_at" in m["s1"]
     t_started = m["s1"]["started_at"]
     man2 = StageManifest(out)  # fresh process resuming
     assert not man2.done("s1", "fp")
     assert man2.committed() == []
-    _write_stage(spark, man2, "s1", "fp", lambda: spark.range(10), os.path.join(out, "s1"))
+    df = _write_stage(
+        spark, man2, "s1", "fp", lambda: spark.range(10),
+        os.path.join(out, "s1"), layout,
+    )
     m2 = json.load(open(os.path.join(out, MANIFEST)))
     assert m2["s1"]["state"] == "committed"
-    assert m2["s1"]["metrics"]["rows"] == 10
+    assert m2["s1"]["metrics"]["rows"] == 10 == df.count()
     assert m2["s1"]["started_at"] >= t_started
     assert man2.committed() == ["s1"]
+    if bucketed:
+        assert m2["s1"]["metrics"]["table"] == "t_crash_bkt"
+        assert m2["s1"]["metrics"]["buckets"] == 4
+        assert spark.catalog.tableExists("t_crash_bkt")
+        spark.sql("DROP TABLE t_crash_bkt")
+    else:
+        assert "table" not in m2["s1"]["metrics"]
 
 
 def test_pipeline_pre_split_multipage_input(spark, tmp_path):
@@ -825,12 +844,15 @@ def test_export_rdf_stage_and_resume(spark, tmp_path):
     matching to_ntriples(canonical) line-for-line, carries row/byte
     lineage in the manifest, and a re-run resumes (no rewrite)."""
     from wikidata_dump_processor_spark.functions.rdf import to_ntriples
+    from wikidata_dump_processor_spark.streaming.incremental import (
+        manifest_snapshot_files,
+    )
 
     out = str(tmp_path / "rdf_pipe")
     pages = datagen.gen_pages(spark, 120)
     res = run_pipeline(
         spark, pages, datagen.gen_aliases(spark), out,
-        fingerprint="n=120", export_rdf=True,
+        fingerprint="n=120", export_rdf=True, snapshot_backend="json",
     )
     got = sorted(r.line for r in res["rdf_ntriples"].collect())
     want = sorted(
@@ -841,6 +863,19 @@ def test_export_rdf_stage_and_resume(spark, tmp_path):
     assert m["rdf_ntriples"]["state"] == "committed"
     assert m["rdf_ntriples"]["metrics"]["rows"] == len(got)
     assert m["rdf_ntriples"]["metrics"]["bytes"] > 0
+    # the part files are the stage's snapshot: the manifest lineage and
+    # the snapshot log both list exactly the .gz files on disk
+    rdf_dir = os.path.join(out, "rdf_ntriples")
+    on_disk = {
+        os.path.join(rdf_dir, f) for f in os.listdir(rdf_dir)
+        if f.endswith(".gz")
+    }
+    assert on_disk and manifest_snapshot_files(out, "rdf_ntriples") == on_disk
+    assert sum(m["rdf_ntriples"]["metrics"]["partitions"].values()) == len(got)
+    snaps = json.load(open(os.path.join(out, "_snapshots.json")))
+    assert {
+        os.path.join(rdf_dir, f) for f in snaps["rdf_ntriples"][-1]["files"]
+    } == on_disk
     # resume: committed_at unchanged on re-run
     before = m["rdf_ntriples"]["committed_at"]
     run_pipeline(

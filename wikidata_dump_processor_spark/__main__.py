@@ -156,22 +156,17 @@ def _query_main(argv: list[str]) -> int:
     base_cols = list(res.columns)
     if args.labels:
         from .plans.bgp import attach_labels
-        from .plans.pipeline import StageManifest, _ensure_bucketed_table
+        from .plans.pipeline import PARQUET, Bucketed, StageManifest, open_stage
 
-        man = StageManifest(args.out)
-        ninfo = man.stages.get("nodes", {})
-        npath = ninfo.get("path", os.path.join(args.out, "nodes"))
+        ninfo = StageManifest(args.out).stages.get("nodes", {})
         nmet = ninfo.get("metrics", {})
-        if nmet.get("table"):
-            # re-attach the bucketed layout so the lookup joins plan
-            # with no Exchange on the nodes side
-            _ensure_bucketed_table(
-                spark, nmet["table"], npath,
-                nmet.get("buckets", 64), "id_num",
-            )
-            nodes = spark.table(nmet["table"])
-        else:
-            nodes = spark.read.parquet(npath)
+        # a bucketed nodes table is re-attached, so the lookup joins plan
+        # with no Exchange on the nodes side
+        nodes = open_stage(
+            spark, ninfo.get("path", os.path.join(args.out, "nodes")),
+            Bucketed(nmet["table"], nmet.get("buckets", 64), "id_num")
+            if nmet.get("table") else PARQUET,
+        )
         res = attach_labels(res, nodes, columns=base_cols)
     cols = res.columns
     rows = res.toLocalIterator()
@@ -253,12 +248,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--pagerank-iters", type=int, default=10)
     p.add_argument("--demo-pages", type=int, default=None,
                    help="generate N deterministic synthetic pages instead of reading PAGES")
-    p.add_argument("--snapshot-backend", default=None,
-                   choices=["json", "iceberg", "auto"],
+    p.add_argument("--snapshot-backend", default=None, choices=["json"],
                    help="mirror every stage commit into a snapshot "
-                        "catalog (plans/snapshots.py): real pyiceberg "
-                        "snapshots when installed, a JSON snapshot log "
-                        "otherwise; manifest entries gain snapshot_id")
+                        "catalog (plans/snapshots.py: a JSON snapshot "
+                        "log); manifest entries gain snapshot_id")
     args = p.parse_args(argv)
 
     from .plans.pipeline import preflight_input_gate, run_pipeline

@@ -5,10 +5,12 @@ Reference model: the orchestrator DAG (wdq0.pl:142-262 / wdq0b.pl:105-124)
 runs fetch -> scan/extract -> sort -> index -> persons -> geonames ->
 inverted index as separate OS processes with files as the IR and
 existence-checks as idempotence guards (wdq0.pl:151-155, 244; wdq0b.pl:108).
-Here each stage is a DataFrame job committed as a parquet snapshot (Iceberg
-stands ready — same layout — but the sandbox has no Iceberg runtime jar,
-so snapshots are directories + a manifest JSON; the manifest plays the
-role of Iceberg's snapshot log).
+Here each stage is a DataFrame job committed as a snapshot: a directory of
+part files plus a manifest JSON entry (the manifest plays the role of
+Iceberg's snapshot log; no Iceberg runtime ships with this repository).
+One writer, ``_write_stage``, runs that commit for every layout — plain /
+partitioned / sorted parquet, bucketed catalog tables and gzip N-Triples —
+and ``open_stage`` is the one path that reads a committed stage back.
 
 Resume: a stage whose manifest entry exists with the same input
 fingerprint is skipped and its output read back (St4-St7, SURVEY.md §2.9).
@@ -23,10 +25,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +41,7 @@ from ..operators.linking import link_mentions, mention_triples
 from ..operators.text_extract import extract_and_detect, exploded_mentions
 
 MANIFEST = "_pipeline_manifest.json"
+log = logging.getLogger(__name__)
 
 
 class GracefulStop(RuntimeError):
@@ -86,12 +91,12 @@ def preflight_input_gate(
 class StageManifest:
     """Tiny snapshot log: stage -> {fingerprint, path, metrics, ts}.
 
-    ``snapshot_backend`` additionally mirrors every stage commit into a
-    snapshot catalog (plans/snapshots.py: ``"json"`` side-log always,
-    ``"iceberg"`` real pyiceberg snapshots when installed, ``"auto"``
-    prefers iceberg) and records the resulting ``snapshot_id`` on the
-    manifest entry — time travel and St3 incremental reads then key on
-    real snapshot ids instead of caller-carried file sets."""
+    ``snapshot_backend="json"`` additionally mirrors every stage commit
+    into the snapshot catalog (plans/snapshots.py) — the file list the
+    stage's lineage metrics already carry, so a commit lists the stage
+    directory once — and records the resulting ``snapshot_id`` on the
+    manifest entry: time travel and St3 incremental reads then key on
+    snapshot ids instead of caller-carried file sets."""
 
     def __init__(self, root: str, snapshot_backend: str | None = None):
         self.root = root
@@ -178,7 +183,7 @@ class StageManifest:
             }
             if self.snapshots is not None:
                 entry["snapshot_id"] = self.snapshots.commit(
-                    stage, path, fingerprint
+                    stage, path, list(metrics["files"]), fingerprint
                 )
                 entry["snapshot_backend"] = self.snapshots.backend
             self.stages[stage] = entry
@@ -195,25 +200,62 @@ def _with_lineage(df: DataFrame) -> DataFrame:
     return df.withColumn("_part_id", F.spark_partition_id())
 
 
-def _list_stage_files(spark: SparkSession, path: str, suffix: str = ".parquet"):
-    """Recursive (rel_path, bytes) data-file listing via the Hadoop FS API —
-    the same client ``preflight_input_gate`` uses, so lineage metrics work
-    on object storage, not just local disk (a local ``glob`` on an
-    s3a:// path silently lists nothing).  Returns (scheme, base, files)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+@dataclass(frozen=True)
+class Parquet:
+    """Parquet part files, optionally hive-partitioned by ``partition_by``
+    and sorted within each write partition on ``sort_within``."""
+
+    partition_by: tuple[str, ...] = ()
+    sort_within: tuple[str, ...] = ()
+
+
+@dataclass(frozen=True)
+class Bucketed:
+    """The PDS-role bucketed layout (SURVEY.md §1.4, PDS.pm:136-150):
+    ``buckets`` hash buckets on ``column``, sorted within each bucket and
+    registered in the catalog as ``table``, so a point lookup or a
+    co-located join plans with NO Exchange on this side."""
+
+    table: str
+    buckets: int
+    column: str
+
+
+@dataclass(frozen=True)
+class NTriples:
+    """Gzip W3C N-Triples text part files (functions/rdf.py); reopened
+    as one ``line`` column."""
+
+
+PARQUET = Parquet()
+
+
+def _list_stage_files(spark: SparkSession, path: str, suffix: str):
+    """A stage's data files as ``(base, is_local, [(rel_path, bytes)])``.
+    The Hadoop FS API — the client ``preflight_input_gate`` uses —
+    resolves the path, so lineage works on object storage (a local glob
+    on an s3a:// path silently lists nothing, and a bare path lives on
+    the remote store when fs.defaultFS points there); a local directory
+    then lists with ``os.walk``, with no per-file py4j round trips."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     qual = fs.makeQualified(hpath)
-    scheme = qual.toUri().getScheme()
     base = str(qual.toUri().getPath())
     files: list[tuple[str, int]] = []
+    if qual.toUri().getScheme() in (None, "file") and os.path.isdir(base):
+        for root, _, names in os.walk(base):
+            for f in names:
+                if f.endswith(suffix):
+                    fp = os.path.join(root, f)
+                    files.append((os.path.relpath(fp, base), os.path.getsize(fp)))
+        return base, True, files
     it = fs.listFiles(qual, True)
     while it.hasNext():
         st = it.next()
         fpath = str(st.getPath().toUri().getPath())
         if fpath.endswith(suffix):
             files.append((os.path.relpath(fpath, base), int(st.getLen())))
-    return (str(scheme) if scheme is not None else None), base, files
+    return base, False, files
 
 
 def _local_footer_rows(base: str, rels: list[str]) -> dict | None:
@@ -248,54 +290,64 @@ def _local_footer_rows(base: str, rels: list[str]) -> dict | None:
         return None
 
 
-def _partition_metrics(spark: SparkSession, path: str) -> dict:
-    """Per-file row counts for the lineage manifest.  Local paths (bare or
-    file:-scheme) list with ``os.walk`` and count rows straight from the
-    parquet footers (metadata only, no Spark job, no per-file py4j round
-    trips — measured 0.3-0.6 s/stage of pure driver overhead before r7);
-    remote stores list through the Hadoop FS API and count with one
-    bounded Spark job grouped by the ``_part_id`` lineage column."""
-    local = None
-    if path.startswith("file://"):
-        local = path[len("file://"):]
-    elif "://" not in path:
-        # a bare path is NOT necessarily local: with fs.defaultFS set to
-        # a remote store the stage data lives there even though a
-        # same-named directory may exist on the driver's disk.  One py4j
-        # call resolves the scheme (vs the per-FILE round trips this
-        # fast path removes).
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        scheme = fs.makeQualified(hpath).toUri().getScheme()
-        if scheme in (None, "file"):
-            local = path
-    if local is not None and os.path.isdir(local):
-        files: list[tuple[str, int]] = []
-        for root, _, fs in os.walk(local):
-            for f in fs:
-                if f.endswith(".parquet"):
-                    fp = os.path.join(root, f)
-                    files.append((os.path.relpath(fp, local), os.path.getsize(fp)))
-        n_bytes = sum(b for _, b in files)
-        per_file = _local_footer_rows(local, [r for r, _ in files])
-        if per_file is not None:
-            return {
-                "rows": sum(per_file.values()),
-                "bytes": n_bytes,
-                "partitions": per_file,
-            }
-    else:
-        _, _, files = _list_stage_files(spark, path)
-        n_bytes = sum(b for _, b in files)
+def _partition_metrics(spark: SparkSession, path: str, text: bool = False) -> dict:
+    """Lineage metrics of a written stage from ONE listing: ``rows``,
+    ``bytes``, per-file row counts (``partitions``) and the
+    ``{rel_path: bytes}`` file list (``files``) the snapshot catalog
+    records.  Local parquet counts rows from the footers (metadata only,
+    no Spark job — measured 0.3-0.6 s/stage of driver overhead before
+    r7).  ``text`` part files carry no footers: one bounded job counts
+    lines per file.  Remote parquet counts with one job grouped by the
+    ``_part_id`` lineage column (``partitions`` then keys on it)."""
+    from urllib.parse import unquote, urlparse
+
+    base, local, files = _list_stage_files(
+        spark, path, ".gz" if text else ".parquet"
+    )
+    metrics = {"bytes": sum(b for _, b in files), "files": dict(files)}
+    per_file = None
+    if text:
+        counts = {
+            os.path.relpath(unquote(urlparse(f).path), base): n
+            for f, n in spark.read.text(path)
+            .groupBy(F.col("_metadata.file_path")).count().collect()
+        }
+        per_file = {rel: counts.get(rel, 0) for rel, _ in files}
+    elif local:
+        per_file = _local_footer_rows(base, [r for r, _ in files])
+    if per_file is not None:
+        return {"rows": sum(per_file.values()), "partitions": per_file, **metrics}
     df = spark.read.parquet(path)
     rows = df.groupBy("_part_id").count().collect() if "_part_id" in df.columns else []
     return {
         "rows": sum(r["count"] for r in rows) if rows else df.count(),
-        "bytes": n_bytes,
         "partitions": {str(r["_part_id"]): r["count"] for r in rows},
-        "files": dict(files),
+        **metrics,
     }
+
+
+def open_stage(spark: SparkSession, path: str, layout=PARQUET) -> DataFrame:
+    """A committed stage's output — the one read-back path (resume, the
+    stage writer's result, the query CLI).  A ``Bucketed`` table is first
+    re-registered with the session catalog when missing: the default
+    in-memory catalog loses table metadata between sessions, but the
+    bucket ids are encoded in the parquet file names, so a CREATE TABLE
+    with the matching CLUSTERED BY spec restores exchange-free join
+    planning — the same re-attach Iceberg does from its own metadata."""
+    if isinstance(layout, NTriples):
+        return spark.read.text(path).withColumnRenamed("value", "line")
+    if not isinstance(layout, Bucketed):
+        return spark.read.parquet(path)
+    if not spark.catalog.tableExists(layout.table):
+        fields = spark.read.parquet(path).schema.fields
+        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
+        loc = path.replace("'", "''")  # SQL-escape quotes in the location
+        spark.sql(
+            f"CREATE TABLE {layout.table} ({cols}) USING parquet "
+            f"CLUSTERED BY ({layout.column}) SORTED BY ({layout.column}) "
+            f"INTO {layout.buckets} BUCKETS LOCATION '{loc}'"
+        )
+    return spark.table(layout.table)
 
 
 def _write_stage(
@@ -305,106 +357,51 @@ def _write_stage(
     fingerprint: str,
     df_fn,
     path: str,
-    partition_by: list[str] | None = None,
-    sort_within: list[str] | None = None,
+    layout=PARQUET,
     extra_metrics_fn=None,
     notify=None,
 ) -> DataFrame:
-    """Run one stage with resume semantics; returns the materialized DF."""
+    """Run one stage under the commit protocol — resume check ->
+    ``manifest.start`` -> write ``df_fn()`` in ``layout`` -> lineage
+    metrics -> ``manifest.commit`` -> notify — and return the committed
+    output via ``open_stage``.  A stage already committed under
+    ``fingerprint`` is not re-run: its output is reopened, no Spark job."""
     if manifest.done(stage, fingerprint):
-        return spark.read.parquet(manifest.stages[stage]["path"])
+        return open_stage(spark, manifest.stages[stage]["path"], layout)
     manifest.start(stage, fingerprint)
     if notify:
         notify(f"stage {stage} started")
     t0 = time.time()
-    df = _with_lineage(df_fn())
-    if sort_within:
-        df = df.sortWithinPartitions(*sort_within)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df = df_fn()
+    if isinstance(layout, NTriples):
+        from ..functions.rdf import write_ntriples
+
+        write_ntriples(df, path)
+    elif isinstance(layout, Bucketed):
+        # the pre-write shuffle uses the bucket spec's Murmur3 hash, so
+        # each task holds exactly one bucket -> one file per bucket; the
+        # lineage column comes AFTER it, so _part_id is the writing bucket
+        df = _with_lineage(df.repartition(layout.buckets, F.col(layout.column)))
+        write_bucketed(df, layout.table, layout.buckets, layout.column, path=path)
+    else:
+        df = _with_lineage(df)
+        if layout.sort_within:
+            df = df.sortWithinPartitions(*layout.sort_within)
+        w = df.write.mode("overwrite")
+        if layout.partition_by:
+            w = w.partitionBy(*layout.partition_by)
+        w.parquet(path)
     t1 = time.time()
-    metrics = _partition_metrics(spark, path)
+    metrics = _partition_metrics(spark, path, text=isinstance(layout, NTriples))
+    if isinstance(layout, Bucketed):
+        metrics.update(buckets=layout.buckets, table=layout.table)
     if extra_metrics_fn is not None:
         metrics.update(extra_metrics_fn() or {})
     manifest.commit(stage, fingerprint, path, metrics)
     if notify:
         notify(f"stage {stage} finished rows={metrics.get('rows')}")
-    if os.environ.get("PIPELINE_TIMING"):
-        print(f"[stage {stage}] write={t1 - t0:.2f}s metrics={time.time() - t1:.2f}s", flush=True)
-    return spark.read.parquet(path)
-
-
-def _ensure_bucketed_table(
-    spark: SparkSession, table: str, path: str,
-    buckets: int, bucket_col: str,
-) -> None:
-    """Re-register an already-written bucketed layout with the session
-    catalog (resume path / new session: the default in-memory catalog
-    loses table metadata between sessions, but the bucket ids are encoded
-    in the parquet file names, so a CREATE TABLE with the matching
-    CLUSTERED BY spec restores exchange-free join planning — the same
-    re-attach Iceberg does from its own metadata)."""
-    if spark.catalog.tableExists(table):
-        return
-    fields = spark.read.parquet(path).schema.fields
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
-    loc = path.replace("'", "''")  # SQL-escape quotes in the location
-    spark.sql(
-        f"CREATE TABLE {table} ({cols}) USING parquet "
-        f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-        f"INTO {buckets} BUCKETS LOCATION '{loc}'"
-    )
-
-
-def _write_stage_bucketed(
-    spark: SparkSession,
-    manifest: StageManifest,
-    stage: str,
-    fingerprint: str,
-    df_fn,
-    path: str,
-    table: str,
-    buckets: int = 64,
-    bucket_col: str = "id_num",
-    notify=None,
-) -> DataFrame:
-    """``_write_stage`` with the PDS-role bucketed layout (SURVEY.md §1.4,
-    PDS.pm:136-150): hash-bucketed + sorted on ``bucket_col``, registered
-    in the catalog so a point-lookup or co-located join plans with NO
-    Exchange on this side.  The pre-write ``repartition(buckets, col)``
-    uses the same Murmur3 hash as the bucket spec, so each task holds
-    exactly one bucket -> one file per bucket, no small-file blowup."""
-    if manifest.done(stage, fingerprint):
-        _ensure_bucketed_table(
-            spark, table, manifest.stages[stage]["path"], buckets, bucket_col
-        )
-        return spark.table(table)
-    manifest.start(stage, fingerprint)
-    if notify:
-        notify(f"stage {stage} started")
-    t0 = time.time()
-    # lineage AFTER the bucket shuffle so _part_id is the writing bucket
-    df = _with_lineage(df_fn().repartition(buckets, F.col(bucket_col)))
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .saveAsTable(table)
-    )
-    t1 = time.time()
-    metrics = _partition_metrics(spark, path)
-    metrics["buckets"] = buckets
-    metrics["table"] = table
-    manifest.commit(stage, fingerprint, path, metrics)
-    if notify:
-        notify(f"stage {stage} finished rows={metrics.get('rows')}")
-    if os.environ.get("PIPELINE_TIMING"):
-        print(f"[stage {stage}] write={t1 - t0:.2f}s metrics={time.time() - t1:.2f}s", flush=True)
-    return spark.table(table)
+    log.debug("stage %s write=%.2fs metrics=%.2fs", stage, t1 - t0, time.time() - t1)
+    return open_stage(spark, path, layout)
 
 
 def run_pipeline(
@@ -573,6 +570,8 @@ def run_pipeline(
         salt = F.pmod(F.xxhash64("subj"), F.lit(n_salts))
         return df.repartition(F.col("pred"), salt)
 
+    by_pred = Parquet(partition_by=("pred",), sort_within=("subj",))
+
     # one slot per submitted job (4 stages + CC remap + optional curate),
     # still degrading to sequential at low task-slot counts (see above)
     n_jobs = 5 + (1 if curate else 0)
@@ -580,15 +579,15 @@ def run_pipeline(
         f_triples = pool.submit(
             _write_stage, spark, man, "triples", fp,
             lambda: by_pred_salted(TR.extract_triples(parsed)),
-            p("triples"), ["pred"], ["subj"], notify=notify,
+            p("triples"), by_pred, notify=notify,
         )
         # items: sorted-within-partition only — repartitionByRange would
         # sample (= compute the plan twice); the consumer-facing `nodes`
         # table below gets the globally range-partitioned layout instead.
         f_items = pool.submit(
             _write_stage, spark, man, "items", fp,
-            lambda: TR.items_table(parsed), p("items"), None, ["id_num"],
-            notify=notify,
+            lambda: TR.items_table(parsed), p("items"),
+            Parquet(sort_within=("id_num",)), notify=notify,
         )
         f_props = pool.submit(
             _write_stage, spark, man, "props", fp,
@@ -660,17 +659,16 @@ def run_pipeline(
         def _remap_job():
             t0 = time.time()
             if man.done("triples", fp):
-                src = spark.read.parquet(
-                    man.stages["triples"]["path"]
-                ).select("subj", "pred", "obj", "src_url")
+                src = open_stage(spark, man.stages["triples"]["path"]).select(
+                    "subj", "pred", "obj", "src_url"
+                )
             else:
                 src = TR.authctrl_claim_triples(parsed)
             r = canonical_remap(src).localCheckpoint(eager=False)
             # count once (materializes the checkpoint), reuse for the
             # broadcast size gate AND the manifest metrics
             n = r.count()
-            if os.environ.get("PIPELINE_TIMING"):
-                print(f"[canonical] cc_loop={time.time() - t0:.2f}s", flush=True)
+            log.debug("stage canonical cc_loop=%.2fs", time.time() - t0)
             return r, n
 
         f_remap = (
@@ -718,21 +716,18 @@ def run_pipeline(
         return go
 
     canonical_kw = dict(
-        partition_by=["pred"],
-        sort_within=["subj"],
+        layout=by_pred,
         extra_metrics_fn=lambda: (
             {"remap_rows": n_remap} if n_remap is not None else {}
         ),
         notify=notify,
     )
-    # catalog identity for the bucketed nodes table: stable per out_dir
-    # (re-runs of the same pipeline overwrite it; concurrent pipelines in
-    # one session get distinct names)
-    nodes_table = "kg_nodes_" + hashlib.md5(
-        os.path.abspath(out_dir).encode()
-    ).hexdigest()[:10]
+    # catalog identity of the bucketed tables: stable per out_dir
+    # (re-runs of the same pipeline overwrite them; concurrent pipelines
+    # in one session get distinct names)
+    out_tag = hashlib.md5(os.path.abspath(out_dir).encode()).hexdigest()[:10]
     nodes_kw = dict(
-        table=nodes_table, buckets=node_buckets, bucket_col="id_num",
+        layout=Bucketed(f"kg_nodes_{out_tag}", node_buckets, "id_num"),
         notify=notify,
     )
     if remap is not None and slots >= 4:
@@ -745,7 +740,7 @@ def run_pipeline(
                 _canonical, p("canonical_triples"), **canonical_kw,
             )
             f_nodes = pool2.submit(
-                _write_stage_bucketed, spark, man, "nodes", fp,
+                _write_stage, spark, man, "nodes", fp,
                 _nodes_from(None), p("nodes"), **nodes_kw,
             )
             canonical_triples = f_cano.result()
@@ -756,7 +751,7 @@ def run_pipeline(
             _canonical, p("canonical_triples"), **canonical_kw,
         )
         _stop_check()
-        nodes = _write_stage_bucketed(
+        nodes = _write_stage(
             spark, man, "nodes", fp, _nodes_from(canonical_triples),
             p("nodes"), **nodes_kw,
         )
@@ -768,17 +763,15 @@ def run_pipeline(
         # (subj_num == the subject's id_num), so nodes⋈triples_by_subj
         # plans exchange-free on both sides and "all triples of Q42" is
         # one pruned bucket's sorted run (wdq2.pl:347-406 point query).
-        tbs_table = "kg_triples_subj_" + hashlib.md5(
-            os.path.abspath(out_dir).encode()
-        ).hexdigest()[:10]
-        tbs = _write_stage_bucketed(
+        tbs = _write_stage(
             spark, man, "triples_by_subj", fp,
             lambda: canonical_triples.drop("_part_id").withColumn(
                 "subj_num",
                 F.regexp_extract("subj", r"^[QL](\d+)$", 1).try_cast("long"),
             ),
-            p("triples_by_subj"), table=tbs_table, buckets=node_buckets,
-            bucket_col="subj_num", notify=notify,
+            p("triples_by_subj"),
+            Bucketed(f"kg_triples_subj_{out_tag}", node_buckets, "subj_num"),
+            notify=notify,
         )
 
     pred_stats = None
@@ -825,40 +818,14 @@ def run_pipeline(
     rdf_lines = None
     if export_rdf:
         _stop_check()
-        # 11. rdf_ntriples — the canonical triples serialized as W3C
+        # rdf_ntriples — the canonical triples serialized as W3C
         # N-Triples (functions/rdf.py: Wikidata IRI scheme, ECHAR
-        # escaping, a narrow JVM map) into gzip text part-files, under
-        # the same snapshot/resume contract as every parquet stage.
-        # Text files carry no parquet footers, so the lineage row count
-        # is one bounded job over the SOURCE parquet (the exported
-        # non-null triple count), and bytes come from the same Hadoop-FS
-        # listing the parquet stages use (suffix .gz).
-        stage, rpath = "rdf_ntriples", p("rdf_ntriples")
-        if man.done(stage, fp):
-            rdf_lines = spark.read.text(
-                man.stages[stage]["path"]
-            ).withColumnRenamed("value", "line")
-        else:
-            from ..functions.rdf import write_ntriples
-
-            man.start(stage, fp)
-            notify(f"stage {stage} started")
-            write_ntriples(canonical_triples, rpath)
-            n_rows = canonical_triples.filter(
-                F.col("subj").isNotNull()
-                & F.col("pred").isNotNull()
-                & F.col("obj").isNotNull()
-            ).count()
-            _, _, gz_files = _list_stage_files(spark, rpath, suffix=".gz")
-            man.commit(stage, fp, rpath, {
-                "rows": n_rows,
-                "bytes": sum(b for _, b in gz_files),
-                "files": len(gz_files),
-            })
-            notify(f"stage {stage} finished rows={n_rows}")
-            rdf_lines = spark.read.text(rpath).withColumnRenamed(
-                "value", "line"
-            )
+        # escaping, a narrow JVM map) into gzip text part files, under
+        # the same commit protocol as every parquet stage.
+        rdf_lines = _write_stage(
+            spark, man, "rdf_ntriples", fp, lambda: canonical_triples,
+            p("rdf_ntriples"), NTriples(), notify=notify,
+        )
 
     notify(f"pipeline finished stages={man.committed()}")
     out = {

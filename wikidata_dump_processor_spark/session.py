@@ -11,7 +11,49 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
+# The driver heap a session gets when SPARK_DRIVER_MEM is unset: this
+# share of min(MemTotal, cgroup memory limit).  The whole heap is pinned
+# and pre-touched below, and Python workers, shuffle files and the page
+# cache must fit beside it on a host without swap.
+HEAP_FRACTION = 1 / 4
+HEAP_FLOOR_MB = 1024
+
+
+def host_memory_bytes(
+    meminfo: str = "/proc/meminfo",
+    cgroup_limits: tuple[str, ...] = (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ),
+) -> int:
+    """The smaller of physical memory and this process's cgroup limit
+    ("max" or an unreadable file means no limit)."""
+    with open(meminfo) as f:
+        total = next(
+            int(line.split()[1]) * 1024 for line in f if line.startswith("MemTotal:")
+        )
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` when set, else ``HEAP_FRACTION`` of the host's
+    memory, in MiB rounded down to 256 MiB (at least ``HEAP_FLOOR_MB``)."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    mb = int(host_memory_bytes() * HEAP_FRACTION) >> 20
+    return f"{max(HEAP_FLOOR_MB, mb - mb % 256)}m"
 
 
 def get_spark(
@@ -35,6 +77,7 @@ def get_spark(
         master = os.environ.get("SPARK_MASTER")
         if master is None:
             master = f"local[{cpus}]"
+    heap = driver_memory()
     b = SparkSession.builder
     if master:
         b = b.master(master)
@@ -79,17 +122,14 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # Pin the heap (-Xms == -Xmx) and pre-touch it: G1's incremental
         # heap expansion under allocation pressure causes kernel-side page
         # zeroing churn that serializes high-concurrency Arrow exchange
         # (measured: 5x slowdown of mapInPandas at local[32] vs local[8]
-        # on this box before pinning).  On a real cluster the same applies
-        # to executor JVMs: spark.executor.extraJavaOptions.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '16g')} -XX:+AlwaysPreTouch",
-        )
+        # before pinning).  On a real cluster the same applies to
+        # executor JVMs: spark.executor.extraJavaOptions.
+        .config("spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
